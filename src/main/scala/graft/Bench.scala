@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.{QueryRegistry, QuerySpec}
+
 /** Benchmark main (driver contract): run every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and print ONE JSON line.
   *
@@ -57,9 +59,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // optional args = query-name filter for local iteration; the driver
     // invokes with no args and gets the full suite
-    val selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
+    val selected: Map[String, QuerySpec.Build] = QueryRegistry.all
+      .filter(q => args.isEmpty || args.contains(q.name)).map(q => q.name -> q.build).toMap
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.queries.QueryRegistry
 
 /** Scratch profiling main (not part of the driver contract): stage-level
   * timings for the PQ pipeline.
@@ -236,7 +237,7 @@ object Prof {
       // Usage: runMain graft.Prof plantime <queryName ...>
       val names = args.drop(1).toSeq
       for (name <- names) {
-        val fn = SparkEntry.queries(name)
+        val fn = QueryRegistry.byName(name).build
         // warmup both phases
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => println(s"[prof] $name failed: ${e.getMessage}") }

@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.queries.QueryRegistry
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -22,12 +25,11 @@ object Verify {
     // stable (sorted) emission order: the driver slices/enumerates results,
     // and Map iteration order is build-dependent — r10 dropped
     // q_window_range_frame from the verified set with no error logged.
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    QueryRegistry.all.sortBy(_.name).filter(spec => nameFilter(spec.name)).foreach { spec =>
+      try spec.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${spec.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${spec.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -42,7 +44,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // sorted by name so two dumps byte-compare
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

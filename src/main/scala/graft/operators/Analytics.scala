@@ -122,15 +122,18 @@ object Analytics {
     // advice instead of risking silent wraparound under non-ANSI
     // sessions (ANSI mode would raise on the wrap anyway, just less
     // helpfully). Nulls pass through the guard unchanged (sum/count skip
-    // them exactly as the decimal form did).
+    // them exactly as the decimal form did). The guard reads the input
+    // BEFORE the cast: under non-ANSI sessions a DECIMAL beyond the LONG
+    // range casts modulo 2^64 and can land back inside the envelope, so
+    // a post-cast check would pass a wrong value into the sums.
     val bound = math.floor(math.sqrt(Long.MaxValue.toDouble / 2.0) / frameRows).toLong
     def guarded(c: Column, name: String): Column =
       when(assert_true(abs(coalesce(c, lit(0L))) <= bound,
         lit(s"rollingCorr: |$name| exceeds the LONG-moment envelope " +
           s"(${bound} at frameRows=$frameRows) — quantize the series " +
           "coarser or restore the DECIMAL(38,0) moment variant")).isNull, c)
-    val x = guarded(xCol.cast("long"), "x")
-    val y = guarded(yCol.cast("long"), "y")
+    val x = guarded(xCol, "x").cast("long")
+    val y = guarded(yCol, "y").cast("long")
     val n   = count(lit(1)).over(w)
     val sx  = sum(x).over(w)
     val sy  = sum(y).over(w)

@@ -54,7 +54,12 @@ object Graph {
     * this operator is EAGER — building the result runs the preparation
     * and per-iteration jobs at call time, not lazily at the caller's
     * first action. Plan auditors and callers that construct-but-discard
-    * pay full execution.
+    * pay full execution. Concretely, this fixed-depth mode runs one eager
+    * `localCheckpoint` job per step while the DataFrame is being built
+    * (inside `queries(...)`), so a harness that times only the action
+    * under-measures it. The step blocks keep no lineage: if an executor
+    * loses one, later actions on the returned DataFrame fail instead of
+    * recomputing it (the scale bound noted on Dedup.exactSubstringDups).
     */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "pageRank: iters must be >= 1")

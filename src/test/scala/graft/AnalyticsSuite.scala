@@ -106,6 +106,27 @@ class AnalyticsSuite extends AnyFunSuite {
       s"expected the envelope guard to raise, got: ${ex.getMessage}")
   }
 
+  test("rollingCorr: a DECIMAL beyond the LONG range fails the envelope guard instead of wrapping") {
+    // non-ANSI: the decimal -> long cast of 2^64 + 5 wraps to 5, which a
+    // guard applied after the cast would pass into the moment sums
+    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val wide = Seq(("k", 1L, BigDecimal(1), BigDecimal(2)),
+          ("k", 2L, BigDecimal(2), BigDecimal("18446744073709551621")))
+        .toDF("k", "t", "x", "y")
+        .select(col("k"), col("t"), col("x").cast("decimal(38,0)").as("x"),
+          col("y").cast("decimal(38,0)").as("y"))
+      val ex = intercept[Exception] {
+        wide.withColumn("c",
+            Analytics.rollingCorr("k", Seq(col("t")), col("x"), col("y"), 20))
+          .collect()
+      }
+      assert(ex.getMessage.contains("LONG-moment envelope"),
+        s"expected the envelope guard to raise, got: ${ex.getMessage}")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+  }
+
   test("rollingCorr: |r| <= 1 on real data wherever defined") {
     val ev = Tables.events(spark, sf)
     val out = ev.withColumn("c", Analytics.rollingCorr("user_id",

@@ -2,9 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.QueryRegistry
+
 /** Full-suite physical-plan guard.
   *
-  * Sweeps EVERY `SparkEntry.queries` entry and asserts that no plan
+  * Sweeps EVERY `QueryRegistry` query and asserts that no plan
   * contains an unbounded all-pairs join. At 100 TB an accidental
   * `CartesianProduct` (or a `BroadcastNestedLoopJoin` whose broadcast side
   * is a full table) is the difference between a linear pass and a job that
@@ -42,7 +44,7 @@ class PlanGuardSuite extends AnyFunSuite {
     */
   private val allowlist: Map[String, String] = Map(
     "embedding_neardup" ->
-      "exact O(n^2) cosine oracle anchor (Explain.scaleNotes); scale path embedding_neardup_lsh",
+      "exact O(n^2) cosine oracle anchor (its QuerySpec note); scale path embedding_neardup_lsh",
     "similarity_knn_join" ->
       "corpus-as-queries broadcast oracle anchor; scale path similarity_knn_join_lsh (bucketed, nothing broadcast)",
     "similarity_topk" ->
@@ -80,8 +82,9 @@ class PlanGuardSuite extends AnyFunSuite {
     try {
       // static plans: AQE off so BroadcastExchange/joins appear un-wrapped
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-        val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+      QueryRegistry.all.sortBy(_.name).foreach { spec =>
+        val name = spec.name
+        val plan = spec.build(spark, sf).queryExecution.executedPlan
         val cartesians = plan.collect { case c: CartesianProductExec => c }
         val badNlj = plan.collect {
           case j: BroadcastNestedLoopJoinExec =>
